@@ -27,9 +27,12 @@ from __future__ import annotations
 import json
 import threading
 import time
+from typing import TYPE_CHECKING
 
-from broker_spark.serving.publish import PublishRequest, PublishSpool
 from broker_spark.storage.store import Storage
+
+if TYPE_CHECKING:  # serving.publish imports the counter names below at load time
+    from broker_spark.serving.publish import PublishSpool
 
 # StreamMetrics.ts:55-77
 INTERVALS: dict[str, dict] = {
@@ -69,6 +72,18 @@ def zero_report(node_address: str) -> dict:
         "currentTime": 0,
         "timestamp": 0,
     }
+
+
+# The node's counters: each name is recorded where the event happens and
+# read by the reporters (VolumeLogger, the sec tier, GET /volume).
+PUBLISHER_MESSAGES = "publisher.messages"  # messages accepted by a publish
+PUBLISHER_BYTES = "publisher.bytes"  # their content bytes
+STORAGE_WRITE_MESSAGES = "storage.writeMessages"  # messages a spool flush wrote to the log
+STORAGE_WRITE_BYTES = "storage.writeBytes"  # their content bytes
+STORAGE_READ_MESSAGES = "storage.readMessages"  # messages an HTTP resend delivered
+STORAGE_READ_BYTES = "storage.readBytes"  # its response-body bytes
+GATEWAY_OUT_MESSAGES = "gateway.outMessages"  # subscriber deliveries: not recorded yet
+GATEWAY_OUT_BYTES = "gateway.outBytes"
 
 
 class MetricsContext:
@@ -124,10 +139,10 @@ class MetricsContext:
 
 # counter name -> report path, for the sec-tier sampler
 _SEC_FIELDS = {
-    ("broker", "messagesToNetworkPerSec"): "publisher.messages",
-    ("broker", "bytesToNetworkPerSec"): "publisher.bytes",
-    ("storage", "bytesWrittenPerSec"): "storage.writeBytes",
-    ("storage", "bytesReadPerSec"): "storage.readBytes",
+    ("broker", "messagesToNetworkPerSec"): PUBLISHER_MESSAGES,
+    ("broker", "bytesToNetworkPerSec"): PUBLISHER_BYTES,
+    ("storage", "bytesWrittenPerSec"): STORAGE_WRITE_BYTES,
+    ("storage", "bytesReadPerSec"): STORAGE_READ_BYTES,
 }
 
 
@@ -212,6 +227,8 @@ class StreamMetrics:
         return [json.loads(r["content"]) for r in rows]
 
     def _publish(self, now: int) -> None:
+        from broker_spark.serving.publish import PublishRequest
+
         self.report["currentTime"] = now
         self.report["timestamp"] = now
         self.spool.publish(

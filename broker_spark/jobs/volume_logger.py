@@ -21,22 +21,32 @@ import json
 import threading
 import time
 
-from broker_spark.jobs.stream_metrics import MetricsContext
+from broker_spark.jobs.stream_metrics import (
+    GATEWAY_OUT_BYTES,
+    GATEWAY_OUT_MESSAGES,
+    PUBLISHER_BYTES,
+    PUBLISHER_MESSAGES,
+    STORAGE_READ_BYTES,
+    STORAGE_READ_MESSAGES,
+    STORAGE_WRITE_BYTES,
+    STORAGE_WRITE_MESSAGES,
+    MetricsContext,
+)
 from broker_spark.serving.publish import PublishRequest, PublishSpool
 
 #: counter -> summary field (events/s); kb/s fields divide the byte
 #: counters by 1000 exactly like VolumeLogger.ts:181-192
 _SUMMARY_RATES = {
-    "inPerSecond": "publisher.messages",
-    "outPerSecond": "gateway.outMessages",
-    "storageReadPerSecond": "storage.readCount",
-    "storageWritePerSecond": "storage.writeCount",
+    "inPerSecond": PUBLISHER_MESSAGES,
+    "outPerSecond": GATEWAY_OUT_MESSAGES,
+    "storageReadPerSecond": STORAGE_READ_MESSAGES,
+    "storageWritePerSecond": STORAGE_WRITE_MESSAGES,
 }
 _SUMMARY_KB = {
-    "kbInPerSecond": "publisher.bytes",
-    "kbOutPerSecond": "gateway.outBytes",
-    "storageReadKbPerSecond": "storage.readBytes",
-    "storageWriteKbPerSecond": "storage.writeBytes",
+    "kbInPerSecond": PUBLISHER_BYTES,
+    "kbOutPerSecond": GATEWAY_OUT_BYTES,
+    "storageReadKbPerSecond": STORAGE_READ_BYTES,
+    "storageWriteKbPerSecond": STORAGE_WRITE_BYTES,
 }
 
 

@@ -35,45 +35,6 @@ def bucket_index(df: DataFrame, bucket_ms: int = DEFAULT_BUCKET_MS) -> DataFrame
     )
 
 
-def message_count(df: DataFrame, stream_id: str) -> DataFrame:
-    """A2 getNumberOfMessagesInStream (src/storage/Storage.ts:520-537)."""
-    return (
-        df.filter(F.col("stream_id") == stream_id)
-        .groupBy("stream_id", "partition")
-        .agg(F.count(F.lit(1)).alias("records"))
-    )
-
-
-def total_bytes(df: DataFrame, stream_id: str) -> DataFrame:
-    """A3 getTotalBytesInStream (src/storage/Storage.ts:539-576).
-
-    LongType sum — the reference's int-overflow fallback re-sum
-    (src/storage/Storage.ts:556-575) is unnecessary.
-    """
-    return (
-        df.filter(F.col("stream_id") == stream_id)
-        .groupBy("stream_id", "partition")
-        .agg(F.sum(F.octet_length(F.col("content"))).alias("total_bytes"))
-    )
-
-
-def first_message_ts(df: DataFrame, stream_id: str, partition: int) -> DataFrame:
-    """A4 getFirstMessageTimestampInStream (src/storage/Storage.ts:452-484).
-    min() reads parquet row-group stats — metadata-only at any scale."""
-    return (
-        df.filter((F.col("stream_id") == stream_id) & (F.col("partition") == partition))
-        .agg(F.min("ts").alias("first_ts"))
-    )
-
-
-def last_message_ts(df: DataFrame, stream_id: str, partition: int) -> DataFrame:
-    """A5 getLastMessageTimestampInStream (src/storage/Storage.ts:486-518)."""
-    return (
-        df.filter((F.col("stream_id") == stream_id) & (F.col("partition") == partition))
-        .agg(F.max("ts").alias("last_ts"))
-    )
-
-
 def partition_metadata(df: DataFrame, stream_id: str, partition: int) -> DataFrame:
     """The DataMetadataEndpoints response (src/http/DataMetadataEndpoints.ts:
     21-26) — totalBytes / totalMessages / firstMessage / lastMessage — as

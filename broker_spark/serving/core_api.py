@@ -24,12 +24,12 @@ from __future__ import annotations
 
 import json
 import socketserver
-import threading
 import urllib.error
 import urllib.parse
 import urllib.request
 from http.server import BaseHTTPRequestHandler
 
+from broker_spark.serving import adapter
 from broker_spark.serving.auth import HttpError, InMemoryCoreApi, StreamFetcher
 
 
@@ -128,13 +128,4 @@ def serve_core_api(
     port is in `.server_address`.  Backed by the same InMemoryCoreApi used
     for in-process runs, so grants/streams configured on the registry are
     visible over the socket immediately."""
-    server_cls = type(
-        "CoreApiServer",
-        (socketserver.ThreadingTCPServer,),
-        {"allow_reuse_address": True, "daemon_threads": True},
-    )
-    server = server_cls((host, port), _CoreApiHandler)
-    server.registry = registry  # type: ignore[attr-defined]
-    t = threading.Thread(target=server.serve_forever, daemon=True)
-    t.start()
-    return server
+    return adapter.start(_CoreApiHandler, host, port, registry=registry)

@@ -13,8 +13,8 @@ Routes (src/http/DataQueryEndpoints.ts:65-105, DataMetadataEndpoints.ts):
 Validation order and every 400 error text match the reference byte-for-
 byte (asserted against test/unit/http/DataQueryEndpoints.test.ts:76-115).
 Authentication (src/http/RequestAuthenticatorMiddleware.ts) is a call-out
-to an external core API and stays out of the engine; plug a check into
-`authenticate` if needed.
+to an external core API through `server.stream_fetcher`; without one every
+request is allowed.
 
 Results are streamed: the handler iterates `Storage.stream_rows`
 (`toLocalIterator`) through `formats.frame`, chunk-encoding each message
@@ -25,18 +25,22 @@ control).
 
 from __future__ import annotations
 
+import itertools
 import json
+import logging
 import re
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+import socketserver
+from functools import partial
+from http.server import BaseHTTPRequestHandler
 from urllib.parse import parse_qs, unquote, urlparse
 
-from broker_spark.operators.resend import (
-    MAX_SEQUENCE_NUMBER_VALUE,
-    MIN_SEQUENCE_NUMBER_VALUE,
-)
+from broker_spark.jobs.stream_metrics import STORAGE_READ_BYTES, STORAGE_READ_MESSAGES
+from broker_spark.schema import MAX_SEQUENCE_NUMBER_VALUE, MIN_SEQUENCE_NUMBER_VALUE
+from broker_spark.serving import adapter
 from broker_spark.serving.formats import frame, get_format
 from broker_spark.storage.store import Storage
+
+logger = logging.getLogger(__name__)
 
 _DATA_RE = re.compile(r"^/(?:api/v1/)?streams/([^/]+)/data/partitions/([^/]+)/(last|from|range)$")
 _META_RE = re.compile(r"^/(?:api/v1/)?streams/([^/]+)/metadata/partitions/([^/]+)$")
@@ -71,48 +75,69 @@ def _seq_or_default(qs: dict, key: str, default: int) -> int:
     return default if v is None or _is_nan(v) else v
 
 
+def _counted(rows, tally: list[int]):
+    """`rows`, adding one to `tally[0]` per row handed on."""
+    for row in rows:
+        tally[0] += 1
+        yield row
+
+
 class DataQueryHandler(BaseHTTPRequestHandler):
-    storage: Storage  # injected by serve()
-    spool = None  # PublishSpool, injected by serve() for the write path
+    """Serves `server.storage`; `serve()` puts the optional `spool`,
+    `stream_fetcher`, `metrics` and `storage_config` on the server too
+    (None switches the feature off)."""
+
     protocol_version = "HTTP/1.1"
 
     def log_message(self, *args) -> None:  # quiet test servers
         pass
 
-    def _send_json(self, status: int, obj) -> None:
-        body = json.dumps(obj).encode()
+    def _send(self, status: int, body: bytes = b"", content_type: str | None = None) -> None:
         self.send_response(status)
-        self.send_header("Content-Type", "application/json")
+        if content_type is not None:
+            self.send_header("Content-Type", content_type)
         self.send_header("Content-Length", str(len(body)))
         self.end_headers()
-        self.wfile.write(body)
+        if body:
+            self.wfile.write(body)
+
+    def _send_json(self, status: int, obj) -> None:
+        self._send(status, json.dumps(obj).encode(), "application/json")
 
     def _error(self, message: str) -> None:
         """sendError (src/http/DataQueryEndpoints.ts:57-62): 400 + JSON."""
         self._send_json(400, {"error": message})
 
-    stream_fetcher = None  # serving.auth.StreamFetcher, injected by serve()
-    metrics = None  # jobs.stream_metrics.MetricsContext, injected by serve()
-    storage_config = None  # storage.config.StorageConfig, injected by serve()
+    def _partition(self, raw: str) -> int | None:
+        """Partition parsing middleware (DataQueryEndpoints.ts:118-129);
+        None once the 400 is sent."""
+        m = re.match(r"^[+-]?\d+", raw)
+        if m is None:
+            self._error(f'Path parameter "partition" not a number: {raw}')
+            return None
+        return int(m.group(0))
 
-    def authenticate(self, stream_id: str, operation: str = "stream_subscribe") -> bool:
-        """Hook for the core-API permission check; default allow."""
-        return True
+    def _timestamp(self, qs: dict, key: str, missing: str) -> int | None:
+        """A required timestamp parameter; None once the 400 is sent."""
+        ts = _parse_int_if_exists(qs, key)
+        if ts is None:
+            self._error(missing)
+        elif _is_nan(ts):
+            self._error(f'Query parameter "{key}" not a number: {_first(qs, key)}')
+        else:
+            return ts
+        return None
 
     def _authorize(self, stream_id: str, operation: str) -> bool:
         """Authenticator middleware (RequestAuthenticatorMiddleware.ts:11-53):
         Bearer-header parsing + memoized StreamFetcher permission check with
-        the reference's status/error mapping.  Falls back to the boolean
-        `authenticate` hook when no StreamFetcher is configured."""
-        if self.stream_fetcher is None:
-            if not self.authenticate(stream_id, operation):
-                self._send_json(403, {"error": "Authentication failed."})
-                return False
+        the reference's status/error mapping.  No StreamFetcher: allow."""
+        if self.server.stream_fetcher is None:
             return True
         from broker_spark.serving.auth import authenticate_request
 
         status, payload = authenticate_request(
-            self.stream_fetcher,
+            self.server.stream_fetcher,
             stream_id,
             self.headers.get("Authorization"),
             operation,
@@ -136,29 +161,21 @@ class DataQueryHandler(BaseHTTPRequestHandler):
             self._handle_metadata(unquote(m.group(1)), m.group(2))
             return
         # GET /volume (src/http/VolumeEndpoint.ts): the metrics report
-        if url.path in ("/volume", "/api/v1/volume") and self.metrics is not None:
-            self._send_json(200, self.metrics.report())
+        metrics = self.server.metrics
+        if url.path in ("/volume", "/api/v1/volume") and metrics is not None:
+            self._send_json(200, metrics.report())
             return
         # GET /streams/:id/storage/partitions/:p (StorageConfigEndpoints.ts):
         # is this stream-partition assigned to this storage node?
         m = _STORAGE_RE.match(url.path)
-        if m and self.storage_config is not None:
+        storage_config = self.server.storage_config
+        if m and storage_config is not None:
             if not re.match(r"^[+-]?\d+", m.group(2)):
-                body = f"Partition is not a number: {m.group(2)}".encode()
-                self.send_response(400)
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-                return
-            found = self.storage_config.has_stream(
-                unquote(m.group(1)), int(m.group(2))
-            )
-            if found:
+                self._send(400, f"Partition is not a number: {m.group(2)}".encode())
+            elif storage_config.has_stream(unquote(m.group(1)), int(m.group(2))):
                 self._send_json(200, {})
             else:
-                self.send_response(404)
-                self.send_header("Content-Length", "0")
-                self.end_headers()
+                self._send(404)
             return
         self._send_json(404, {"error": f"Not found: {url.path}"})
 
@@ -169,6 +186,7 @@ class DataQueryHandler(BaseHTTPRequestHandler):
             PublishError,
             parse_publish_query,
         )
+        from broker_spark.serving.validator import ValidationError
 
         url = urlparse(self.path)
         m = _PRODUCE_RE.match(url.path)
@@ -180,7 +198,7 @@ class DataQueryHandler(BaseHTTPRequestHandler):
         # the route handler (DataProduceEndpoints.ts router wiring)
         if not self._authorize(stream_id, "stream_publish"):
             return
-        if self.spool is None:
+        if self.server.spool is None:
             self._send_json(501, {"error": "Publishing not enabled on this node."})
             return
         length = int(self.headers.get("Content-Length") or 0)
@@ -194,30 +212,18 @@ class DataQueryHandler(BaseHTTPRequestHandler):
         qs = parse_qs(url.query, keep_blank_values=True)
         try:
             req = parse_publish_query(stream_id, body, qs)
-            self.spool.publish(req)
-        except PublishError as e:
+            self.server.spool.publish(req)
+        except (PublishError, ValidationError) as e:
+            # validator rejections (signature/policy) are client errors too,
+            # like the reference's FailedToPublishError -> 400 path
             self._error(str(e))
             return
-        except Exception as e:
-            # validator rejections (signature/policy) are client errors,
-            # like the reference's FailedToPublishError -> 400 path
-            from broker_spark.serving.validator import ValidationError
-
-            if isinstance(e, ValidationError):
-                self._error(str(e))
-                return
-            raise
         self._send_json(200, {})
 
     # -- data queries -------------------------------------------------------
     def _handle_data(self, stream_id: str, partition_raw: str, name: str, qs: dict) -> None:
-        # partition parsing middleware (DataQueryEndpoints.ts:118-129)
-        pm = re.match(r"^[+-]?\d+", partition_raw)
-        if not pm:
-            self._error(f'Path parameter "partition" not a number: {partition_raw}')
-            return
-        partition = int(pm.group(0))
-        if not self._authorize(stream_id, "stream_subscribe"):
+        partition = self._partition(partition_raw)
+        if partition is None or not self._authorize(stream_id, "stream_subscribe"):
             return
         fmt = get_format(_first(qs, "format"))
         if fmt is None:
@@ -226,6 +232,7 @@ class DataQueryHandler(BaseHTTPRequestHandler):
         version = _parse_int_if_exists(qs, "version")
         version = None if version is None or _is_nan(version) else version
 
+        storage = self.server.storage
         if name == "last":
             count = _parse_int_if_exists(qs, "count")
             if count is None:
@@ -233,78 +240,63 @@ class DataQueryHandler(BaseHTTPRequestHandler):
             if _is_nan(count):
                 self._error(f'Query parameter "count" not a number: {_first(qs, "count")}')
                 return
-            df = self.storage.request_last(stream_id, partition, count)
+            query = partial(storage.request_last, stream_id, partition, count)
         elif name == "from":
-            from_ts = _parse_int_if_exists(qs, "fromTimestamp")
-            from_seq = _seq_or_default(qs, "fromSequenceNumber", MIN_SEQUENCE_NUMBER_VALUE)
-            publisher_id = _first(qs, "publisherId")
+            from_ts = self._timestamp(qs, "fromTimestamp", 'Query parameter "fromTimestamp" required.')
             if from_ts is None:
-                self._error('Query parameter "fromTimestamp" required.')
                 return
-            if _is_nan(from_ts):
-                self._error(
-                    f'Query parameter "fromTimestamp" not a number: {_first(qs, "fromTimestamp")}'
-                )
-                return
-            df = self.storage.request_from(
-                stream_id, partition, from_ts, from_seq, publisher_id or None, None
+            from_seq = _seq_or_default(qs, "fromSequenceNumber", MIN_SEQUENCE_NUMBER_VALUE)
+            query = partial(
+                storage.request_from,
+                stream_id, partition, from_ts, from_seq, _first(qs, "publisherId") or None, None,
             )
         else:  # range
-            from_ts = _parse_int_if_exists(qs, "fromTimestamp")
-            to_ts = _parse_int_if_exists(qs, "toTimestamp")
-            from_seq = _seq_or_default(qs, "fromSequenceNumber", MIN_SEQUENCE_NUMBER_VALUE)
-            to_seq = _seq_or_default(qs, "toSequenceNumber", MAX_SEQUENCE_NUMBER_VALUE)
-            publisher_id = _first(qs, "publisherId")
-            msg_chain_id = _first(qs, "msgChainId")
             if "fromOffset" in qs or "toOffset" in qs:
                 self._error(
                     'Query parameters "fromOffset" and "toOffset" are no longer supported.'
                     ' Please use "fromTimestamp" and "toTimestamp".'
                 )
                 return
+            from_ts = self._timestamp(qs, "fromTimestamp", 'Query parameter "fromTimestamp" required.')
             if from_ts is None:
-                self._error('Query parameter "fromTimestamp" required.')
                 return
-            if _is_nan(from_ts):
-                self._error(
-                    f'Query parameter "fromTimestamp" not a number: {_first(qs, "fromTimestamp")}'
-                )
-                return
+            to_ts = self._timestamp(
+                qs, "toTimestamp",
+                'Query parameter "toTimestamp" required as well. To request all messages'
+                " since a timestamp, use the endpoint /streams/:id/data/partitions/:partition/from",
+            )
             if to_ts is None:
-                self._error(
-                    'Query parameter "toTimestamp" required as well. To request all messages'
-                    " since a timestamp, use the endpoint"
-                    " /streams/:id/data/partitions/:partition/from"
-                )
                 return
-            if _is_nan(to_ts):
-                self._error(
-                    f'Query parameter "toTimestamp" not a number: {_first(qs, "toTimestamp")}'
-                )
-                return
+            publisher_id = _first(qs, "publisherId")
+            msg_chain_id = _first(qs, "msgChainId")
             if bool(publisher_id) != bool(msg_chain_id):
                 self._error('Invalid combination of "publisherId" and "msgChainId"')
                 return
-            df = self.storage.request_range(
+            query = partial(
+                storage.request_range,
                 stream_id,
                 partition,
                 from_ts,
-                from_seq,
+                _seq_or_default(qs, "fromSequenceNumber", MIN_SEQUENCE_NUMBER_VALUE),
                 to_ts,
-                to_seq,
+                _seq_or_default(qs, "toSequenceNumber", MAX_SEQUENCE_NUMBER_VALUE),
                 publisher_id or None,
                 msg_chain_id or None,
             )
 
-        # Pull the first frame chunk BEFORE committing the 200 so a storage
-        # failure still yields the reference's 500 JSON ('data.on("error")'
-        # before headersSent, DataQueryEndpoints.ts:86-93).
+        # Build the query and pull the first frame chunk BEFORE committing
+        # the 200, so a storage failure still yields the reference's 500 JSON
+        # ('data.on("error")' before headersSent, DataQueryEndpoints.ts:86-93).
+        metrics = self.server.metrics
+        delivered = [0]
         try:
-            pieces = frame(self.storage.stream_rows(df), fmt, version)
-            first = next(pieces)
-        except StopIteration:
-            first = None
+            rows = storage.stream_rows(query())
+            if metrics is not None:
+                rows = _counted(rows, delivered)
+            pieces = frame(rows, fmt, version)
+            first = next(pieces)  # frame always yields a header and a footer
         except Exception:
+            logger.exception("resend %s failed before the response: %s", name, self.path)
             self._send_json(500, {"error": "Failed to fetch data!"})
             return
         self.send_response(200)
@@ -313,12 +305,7 @@ class DataQueryHandler(BaseHTTPRequestHandler):
         self.end_headers()
         out_bytes = 0
         try:
-            for piece in ([first] if first is not None else []):
-                data = piece.encode()
-                if data:
-                    self.wfile.write(b"%x\r\n%s\r\n" % (len(data), data))
-                    out_bytes += len(data)
-            for piece in pieces:
+            for piece in itertools.chain((first,), pieces):
                 data = piece.encode()
                 if data:
                     self.wfile.write(b"%x\r\n%s\r\n" % (len(data), data))
@@ -326,21 +313,28 @@ class DataQueryHandler(BaseHTTPRequestHandler):
             self.wfile.write(b"0\r\n\r\n")
         except (BrokenPipeError, ConnectionResetError):
             pass  # client abort cancels the iteration (DataQueryEndpoints.ts:96-99)
+        except Exception:
+            # the 200 is out: end the connection without the terminator so
+            # the client cannot take the truncated body for a complete one
+            logger.exception("resend %s failed mid-response: %s", name, self.path)
+            self.close_connection = True
         finally:
-            if self.metrics is not None:  # storageRead counters (VolumeLogger)
-                self.metrics.record("storage.readBytes", out_bytes)
-                self.metrics.record("storage.readMessages", 1)
+            if metrics is not None:  # storageRead counters (VolumeLogger)
+                metrics.record(STORAGE_READ_BYTES, out_bytes)
+                metrics.record(STORAGE_READ_MESSAGES, delivered[0])
 
     # -- metadata (DataMetadataEndpoints.ts) --------------------------------
     def _handle_metadata(self, stream_id: str, partition_raw: str) -> None:
-        pm = re.match(r"^[+-]?\d+", partition_raw)
-        if not pm:
-            self._error(f'Path parameter "partition" not a number: {partition_raw}')
+        partition = self._partition(partition_raw)
+        if partition is None:
             return
-        partition = int(pm.group(0))
-        st = self.storage
-        meta = st.partition_metadata(stream_id, partition)
-        self._send_json(200, meta)
+        try:
+            metadata = self.server.storage.partition_metadata(stream_id, partition)
+        except Exception:
+            logger.exception("metadata failed: %s", self.path)
+            self._send_json(500, {"error": "Failed to fetch data!"})
+            return
+        self._send_json(200, metadata)
 
 
 def serve(
@@ -351,25 +345,15 @@ def serve(
     stream_fetcher=None,
     metrics=None,
     storage_config=None,
-) -> ThreadingHTTPServer:
+) -> socketserver.ThreadingTCPServer:
     """Start the gateway on a background thread; returns the server (use
     `.server_address` for the bound port, `.shutdown()` to stop).  Pass a
     `publish.PublishSpool` to enable the write path, an
     `auth.StreamFetcher` to enable the authenticator middleware, a
     `stream_metrics.MetricsContext` to enable GET /volume + counters, and
     a `storage.config.StorageConfig` for the assignment endpoint."""
-    handler = type(
-        "BoundDataQueryHandler",
-        (DataQueryHandler,),
-        {
-            "storage": storage,
-            "spool": spool,
-            "stream_fetcher": stream_fetcher,
-            "metrics": metrics,
-            "storage_config": storage_config,
-        },
+    return adapter.start(
+        DataQueryHandler, host, port,
+        storage=storage, spool=spool, stream_fetcher=stream_fetcher,
+        metrics=metrics, storage_config=storage_config,
     )
-    server = ThreadingHTTPServer((host, port), handler)
-    t = threading.Thread(target=server.serve_forever, daemon=True)
-    t.start()
-    return server

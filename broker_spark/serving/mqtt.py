@@ -36,13 +36,13 @@ client speaks it.
 
 from __future__ import annotations
 
-import json
 import socketserver
 import struct
 import threading
 import time
 from collections import defaultdict
 
+from broker_spark.serving import adapter
 from broker_spark.serving.publish import (
     PublishError,
     PublishRequest,
@@ -511,14 +511,6 @@ def serve_mqtt(
     """Start the MQTT server on a background thread.  Returns the server;
     `.server_address` has the bound port, `.broker` the shared state (attach
     `broker.broadcast_row` to a foreachBatch sink for streamed delivery)."""
-    broker = broker if broker is not None else MqttBroker(spool)
-    server_cls = type(
-        "MqttServer",
-        (socketserver.ThreadingTCPServer,),
-        {"allow_reuse_address": True, "daemon_threads": True},
+    return adapter.start(
+        MqttHandler, host, port, broker=broker if broker is not None else MqttBroker(spool)
     )
-    server = server_cls((host, port), MqttHandler)
-    server.broker = broker  # type: ignore[attr-defined]
-    t = threading.Thread(target=server.serve_forever, daemon=True)
-    t.start()
-    return server

@@ -22,6 +22,12 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from broker_spark.functions.partitioner import partition_for_key
+from broker_spark.jobs.stream_metrics import (
+    PUBLISHER_BYTES,
+    PUBLISHER_MESSAGES,
+    STORAGE_WRITE_BYTES,
+    STORAGE_WRITE_MESSAGES,
+)
 from broker_spark.storage.store import Storage
 
 # src/Publisher.ts:6 — +300 s future threshold
@@ -193,8 +199,8 @@ class PublishSpool:
                 )
             )
         if self.metrics is not None:  # VolumeLogger eventsIn / kbIn counters
-            self.metrics.record("publisher.messages", 1)
-            self.metrics.record("publisher.bytes", len(req.content))
+            self.metrics.record(PUBLISHER_MESSAGES, 1)
+            self.metrics.record(PUBLISHER_BYTES, len(req.content))
         # tz-aware datetimes: naive ones go through time.mktime (driver-OS
         # local tz) in non-Arrow createDataFrame, shifting every stored ts
         # on non-UTC hosts; aware UTC datetimes convert offset-free.
@@ -248,5 +254,5 @@ class PublishSpool:
         df = self.storage.spark.createDataFrame(rows, ENVELOPE_DDL)
         self.storage.store(df)
         if self.metrics is not None:  # storageWrite counters (VolumeLogger)
-            self.metrics.record("storage.writeMessages", len(rows))
-            self.metrics.record("storage.writeBytes", sum(len(r[-1]) for r in rows))
+            self.metrics.record(STORAGE_WRITE_MESSAGES, len(rows))
+            self.metrics.record(STORAGE_WRITE_BYTES, sum(len(r[-1]) for r in rows))

@@ -33,6 +33,8 @@ import socketserver
 import threading
 import time
 
+from broker_spark.schema import MAX_SEQUENCE_NUMBER_VALUE, MIN_SEQUENCE_NUMBER_VALUE
+from broker_spark.serving import adapter
 from broker_spark.serving.formats import to_protocol_array
 from broker_spark.serving.publish import (
     PublishError,
@@ -46,9 +48,8 @@ from broker_spark.streaming.fanout import SubscriptionRegistry
 
 
 class ControlHandler(socketserver.StreamRequestHandler):
-    storage: Storage
-    spool: PublishSpool | None
-    registry: SubscriptionRegistry
+    """Serves `server.storage`, `server.spool` (None: publishing off) and
+    `server.registry` (the fan-out subscriptions)."""
 
     def _send(self, obj: dict) -> None:
         with self._write_lock:
@@ -61,30 +62,35 @@ class ControlHandler(socketserver.StreamRequestHandler):
 
     def finish(self) -> None:
         # drop all of this connection's subscriptions (Connection close path)
-        for sid, p in list(self.registry.subscribed_keys()):
-            self.registry.unsubscribe(self._conn_id, sid, p)
+        for sid, p in list(self.server.registry.subscribed_keys()):
+            self.server.registry.unsubscribe(self._conn_id, sid, p)
         super().finish()
 
     def handle(self) -> None:
         for raw in self.rfile:
-            line = raw.decode().strip()
-            if not line:
-                continue
-            try:
-                req = json.loads(line)
-            except ValueError:
-                self._send({"type": "ErrorResponse", "errorMessage": "Invalid request",
-                            "errorCode": "INVALID_REQUEST"})
-                continue
-            try:
-                self._dispatch(req)
-            except Exception as e:  # noqa: BLE001 — connection must survive
-                self._send({
-                    "type": "ErrorResponse",
-                    "requestId": req.get("requestId"),
-                    "errorMessage": str(e),
-                    "errorCode": "ERROR_WHILE_HANDLING_REQUEST",
-                })
+            if raw.strip():
+                self.handle_message(raw)
+
+    def handle_message(self, raw: bytes) -> None:
+        """One control message, whatever the transport framed it in
+        (WebsocketServer.ts:188 deserialize -> handleRequest)."""
+        try:
+            req = json.loads(raw)
+        except ValueError:
+            req = None
+        if not isinstance(req, dict):
+            self._send({"type": "ErrorResponse", "errorMessage": "Invalid request",
+                        "errorCode": "INVALID_REQUEST"})
+            return
+        try:
+            self._dispatch(req)
+        except Exception as e:  # noqa: BLE001 — connection must survive
+            self._send({
+                "type": "ErrorResponse",
+                "requestId": req.get("requestId"),
+                "errorMessage": str(e),
+                "errorCode": "ERROR_WHILE_HANDLING_REQUEST",
+            })
 
     # RequestHandler.handleRequest switch (RequestHandler.ts:70-93)
     def _dispatch(self, req: dict) -> None:
@@ -92,7 +98,7 @@ class ControlHandler(socketserver.StreamRequestHandler):
         if t == "PublishRequest":
             self._publish(req)
         elif t == "SubscribeRequest":
-            self.registry.subscribe(
+            self.server.registry.subscribe(
                 self._conn_id,
                 req["streamId"],
                 int(req.get("streamPartition", 0)),
@@ -107,7 +113,7 @@ class ControlHandler(socketserver.StreamRequestHandler):
                 "streamPartition": int(req.get("streamPartition", 0)),
             })
         elif t == "UnsubscribeRequest":
-            self.registry.unsubscribe(
+            self.server.registry.unsubscribe(
                 self._conn_id, req["streamId"], int(req.get("streamPartition", 0))
             )
             self._send({
@@ -124,7 +130,7 @@ class ControlHandler(socketserver.StreamRequestHandler):
                         "errorCode": "INVALID_REQUEST"})
 
     def _publish(self, req: dict) -> None:
-        if self.spool is None:
+        if self.server.spool is None:
             raise RuntimeError("Publishing not enabled on this node.")
         content = wrap_mqtt_payload(req["content"]) if isinstance(req.get("content"), str) \
             else json.dumps(req.get("content"))
@@ -138,7 +144,7 @@ class ControlHandler(socketserver.StreamRequestHandler):
             partition_key=req.get("partitionKey"),
         )
         try:
-            partition = self.spool.publish(pub)
+            partition = self.server.spool.publish(pub)
         except PublishError as e:
             self._send({"type": "ErrorResponse", "requestId": req.get("requestId"),
                         "errorMessage": str(e), "errorCode": "PUBLISH_FAILED"})
@@ -147,27 +153,26 @@ class ControlHandler(socketserver.StreamRequestHandler):
                     "streamId": req["streamId"], "streamPartition": partition})
 
     def _resend(self, req: dict) -> None:
+        storage = self.server.storage
         sid = req["streamId"]
         part = int(req.get("streamPartition", 0))
         t = req["type"]
         if t == "ResendLastRequest":
-            df = self.storage.request_last(sid, part, int(req["numberLast"]))
+            df = storage.request_last(sid, part, int(req["numberLast"]))
         elif t == "ResendFromRequest":
-            df = self.storage.request_from(
+            df = storage.request_from(
                 sid, part,
-                int(req["fromTimestamp"]), int(req.get("fromSequenceNumber", 0)),
+                int(req["fromTimestamp"]), int(req.get("fromSequenceNumber", MIN_SEQUENCE_NUMBER_VALUE)),
                 req.get("publisherId"), None,
             )
         else:
-            df = self.storage.request_range(
+            df = storage.request_range(
                 sid, part,
-                int(req["fromTimestamp"]), int(req.get("fromSequenceNumber", 0)),
-                int(req["toTimestamp"]), int(req.get("toSequenceNumber", 2147483647)),
+                int(req["fromTimestamp"]), int(req.get("fromSequenceNumber", MIN_SEQUENCE_NUMBER_VALUE)),
+                int(req["toTimestamp"]), int(req.get("toSequenceNumber", MAX_SEQUENCE_NUMBER_VALUE)),
                 req.get("publisherId"), req.get("msgChainId"),
             )
-        for msg in resend_response(
-            req.get("requestId", ""), sid, part, self.storage.stream_rows(df)
-        ):
+        for msg in resend_response(req.get("requestId", ""), sid, part, storage.stream_rows(df)):
             self._send(msg)
 
 
@@ -181,21 +186,7 @@ def serve_control(
     """Start the control server on a background thread.  Returns the server;
     `.server_address` has the bound port, `.registry` the fan-out registry
     (wire it to `streaming.fanout.foreach_batch_fanout` for live data)."""
-    registry = registry if registry is not None else SubscriptionRegistry()
-    handler = type(
-        "BoundControlHandler",
-        (ControlHandler,),
-        {"storage": storage, "spool": spool, "registry": registry},
+    return adapter.start(
+        ControlHandler, host, port, storage=storage, spool=spool,
+        registry=registry if registry is not None else SubscriptionRegistry(),
     )
-    server_cls = type(
-        "ControlServer",
-        (socketserver.ThreadingTCPServer,),
-        # daemon handler threads: a lingering client connection must not
-        # block interpreter shutdown (ThreadingHTTPServer's default too)
-        {"allow_reuse_address": True, "daemon_threads": True},
-    )
-    server = server_cls((host, port), handler)
-    server.registry = registry  # type: ignore[attr-defined]
-    t = threading.Thread(target=server.serve_forever, daemon=True)
-    t.start()
-    return server

@@ -5,7 +5,7 @@ The reference serves the streamr control layer over uWS websockets
 same request/response dispatch over newline-JSON.  This module completes
 transport parity: a stdlib RFC 6455 server — HTTP Upgrade handshake,
 frame codec (text/close/ping/pong, client-masked), one JSON control
-message per text frame — reusing ControlHandler's dispatch unchanged.
+message per text frame, each handled by ControlHandler.handle_message.
 
 Liveness mirrors WebsocketServer.ts:92-94,305-325: the server pings every
 `ping_interval` seconds; a connection that hasn't answered the previous
@@ -16,11 +16,13 @@ from __future__ import annotations
 
 import base64
 import hashlib
+import json
 import socketserver
 import struct
 import threading
 import time
 
+from broker_spark.serving import adapter
 from broker_spark.serving.tcp import ControlHandler
 from broker_spark.storage.store import Storage
 from broker_spark.streaming.fanout import SubscriptionRegistry
@@ -83,9 +85,7 @@ def read_frame(rfile) -> tuple[int, bytes] | None:
 
 class WebSocketControlHandler(ControlHandler):
     """ControlHandler dispatch over WS frames: one JSON control message per
-    text frame, in both directions."""
-
-    ping_interval_s: float = DEFAULT_PING_INTERVAL_S
+    text frame, in both directions; pings every `server.ping_interval_s`."""
 
     def _send_raw(self, frame: bytes) -> None:
         with self._write_lock:
@@ -93,8 +93,6 @@ class WebSocketControlHandler(ControlHandler):
             self.wfile.flush()
 
     def _send(self, obj: dict) -> None:  # dispatch responses -> text frames
-        import json
-
         self._send_raw(encode_frame(OP_TEXT, json.dumps(obj).encode()))
 
     def _handshake(self) -> bool:
@@ -124,8 +122,6 @@ class WebSocketControlHandler(ControlHandler):
         return True
 
     def handle(self) -> None:
-        import json
-
         if not self._handshake():
             return
         self.responded_pong: bool | None = None  # None = never pinged yet
@@ -139,21 +135,7 @@ class WebSocketControlHandler(ControlHandler):
                     return
                 opcode, payload = frame
                 if opcode == OP_TEXT:
-                    try:
-                        req = json.loads(payload.decode())
-                    except ValueError:
-                        self._send({"type": "ErrorResponse", "errorMessage":
-                                    "Invalid request", "errorCode": "INVALID_REQUEST"})
-                        continue
-                    try:
-                        self._dispatch(req)
-                    except Exception as e:  # noqa: BLE001 — keep the socket
-                        self._send({
-                            "type": "ErrorResponse",
-                            "requestId": req.get("requestId"),
-                            "errorMessage": str(e),
-                            "errorCode": "ERROR_WHILE_HANDLING_REQUEST",
-                        })
+                    self.handle_message(payload)
                 elif opcode == OP_PING:  # must answer client pings (§5.5.2)
                     self._send_raw(encode_frame(OP_PONG, payload))
                 elif opcode == OP_PONG:
@@ -170,7 +152,7 @@ class WebSocketControlHandler(ControlHandler):
         """_pingConnections (WebsocketServer.ts:305-325): ping every
         interval; no pong since the previous ping -> force close."""
         while self._alive:
-            time.sleep(self.ping_interval_s)
+            time.sleep(self.server.ping_interval_s)
             if not self._alive:
                 return
             if self.responded_pong is False:  # pinged before, no pong back
@@ -196,24 +178,8 @@ def serve_ws(
 ) -> socketserver.ThreadingTCPServer:
     """Start the WS control server on a background thread (same contract
     as tcp.serve_control; `.registry` feeds streaming fan-out)."""
-    registry = registry if registry is not None else SubscriptionRegistry()
-    handler = type(
-        "BoundWsHandler",
-        (WebSocketControlHandler,),
-        {
-            "storage": storage,
-            "spool": spool,
-            "registry": registry,
-            "ping_interval_s": ping_interval_s,
-        },
+    return adapter.start(
+        WebSocketControlHandler, host, port, storage=storage, spool=spool,
+        registry=registry if registry is not None else SubscriptionRegistry(),
+        ping_interval_s=ping_interval_s,
     )
-    server_cls = type(
-        "WsControlServer",
-        (socketserver.ThreadingTCPServer,),
-        {"allow_reuse_address": True, "daemon_threads": True},
-    )
-    server = server_cls((host, port), handler)
-    server.registry = registry  # type: ignore[attr-defined]
-    t = threading.Thread(target=server.serve_forever, daemon=True)
-    t.start()
-    return server

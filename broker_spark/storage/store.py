@@ -2,23 +2,40 @@
 partitioned parquet log + the resend/metadata operators.
 
 Mirrors the public surface of src/storage/Storage.ts:
-requestLast / requestFrom / requestRange (101-435), first/last message ts
-(452-518), message count (520-537), total bytes (539-576) — each returning
-a lazily-planned DataFrame; the serving layer decides how to consume it
-(`toLocalIterator()` for streamed delivery with backpressure, the analog of
-the reference's pause/resume row streaming at 412-435).
+requestLast / requestFrom / requestRange (101-435), each returning a
+lazily-planned DataFrame the serving layer consumes (`toLocalIterator()`
+for streamed delivery with backpressure, the analog of the reference's
+pause/resume row streaming at 412-435), and the first/last/count/bytes
+metadata (452-576) as one `partition_metadata` answer.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from broker_spark.operators import metadata, resend
 from broker_spark.schema import DEFAULT_BUCKET_MS
 from broker_spark.storage.writer import read_stream_data, write_stream_data
+
+# What Spark says when asked to read a table nobody has written yet.
+_NOT_WRITTEN_YET = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def read_if_written(read: Callable[[], DataFrame]) -> DataFrame | None:
+    """`read()`, or None when its table does not exist yet (no directory,
+    or one with no data files).  Any other failure — a corrupt file, an
+    unreadable directory — raises: a broken log must not pass for an empty
+    one."""
+    try:
+        return read()
+    except AnalysisException as e:
+        if e.getCondition() in _NOT_WRITTEN_YET:
+            return None
+        raise
 
 
 class Storage:
@@ -41,12 +58,11 @@ class Storage:
         self.summary_path = summary_path
 
     def _summary(self) -> DataFrame | None:
+        """The bucket-index summary, or None (not configured or not
+        materialized yet) to fall back to scanning the log."""
         if self.summary_path is None:
             return None
-        try:
-            return self.spark.read.parquet(self.summary_path)
-        except Exception:
-            return None  # not materialized yet -> fall back to log scan
+        return read_if_written(lambda: self.spark.read.parquet(self.summary_path))
 
     # -- write path ---------------------------------------------------------
     def store(self, df: DataFrame) -> None:
@@ -72,9 +88,8 @@ class Storage:
         incoming = with_bucket(df, bucket_ms=self.bucket_ms).dropDuplicates(
             MESSAGE_ID_COLUMNS
         )
-        try:
-            existing = read_stream_data(self.spark, self.path)
-        except Exception:  # first write: nothing to dedup against
+        existing = read_if_written(lambda: read_stream_data(self.spark, self.path))
+        if existing is None:  # first write: nothing to dedup against
             write_stream_data(df.dropDuplicates(MESSAGE_ID_COLUMNS), self.path,
                               bucket_ms=self.bucket_ms)
             return
@@ -90,13 +105,13 @@ class Storage:
         """The message log; a not-yet-written log reads as an empty frame
         (a fresh broker answers resends with NoResend, it doesn't 500 —
         cf. the reference's empty-result tests, Storage.test.ts:95-121)."""
-        try:
-            return read_stream_data(self.spark, self.path)
-        except Exception:
-            from broker_spark.schema import STREAM_MESSAGE_SCHEMA
+        log = read_if_written(lambda: read_stream_data(self.spark, self.path))
+        if log is not None:
+            return log
+        from broker_spark.schema import STREAM_MESSAGE_SCHEMA
 
-            empty = self.spark.createDataFrame([], STREAM_MESSAGE_SCHEMA)
-            return empty.withColumn("bucket", F.lit(0).cast("long")).filter(F.lit(False))
+        empty = self.spark.createDataFrame([], STREAM_MESSAGE_SCHEMA)
+        return empty.withColumn("bucket", F.lit(0).cast("long")).filter(F.lit(False))
 
     def request_last(self, stream_id: str, partition: int, n: int) -> DataFrame:
         return resend.request_last(
@@ -155,44 +170,6 @@ class Storage:
         return df.toLocalIterator(prefetchPartitions=True)
 
     # -- metadata (src/http/DataMetadataEndpoints.ts:21-26) -----------------
-    def get_first_message_ts(self, stream_id: str, partition: int) -> DataFrame:
-        s = self._summary()
-        if s is not None:
-            return (
-                s.filter((F.col("stream_id") == stream_id) & (F.col("partition") == partition))
-                .agg(F.min("date_create").alias("first_ts"))
-            )
-        return metadata.first_message_ts(self._log(), stream_id, partition)
-
-    def get_last_message_ts(self, stream_id: str, partition: int) -> DataFrame:
-        s = self._summary()
-        if s is not None:
-            return (
-                s.filter((F.col("stream_id") == stream_id) & (F.col("partition") == partition))
-                .agg(F.max("max_ts").alias("last_ts"))
-            )
-        return metadata.last_message_ts(self._log(), stream_id, partition)
-
-    def get_number_of_messages(self, stream_id: str) -> DataFrame:
-        s = self._summary()
-        if s is not None:
-            return (
-                s.filter(F.col("stream_id") == stream_id)
-                .groupBy("stream_id", "partition")
-                .agg(F.sum("records").alias("records"))
-            )
-        return metadata.message_count(self._log(), stream_id)
-
-    def get_total_bytes(self, stream_id: str) -> DataFrame:
-        s = self._summary()
-        if s is not None:
-            return (
-                s.filter(F.col("stream_id") == stream_id)
-                .groupBy("stream_id", "partition")
-                .agg(F.sum("size").alias("total_bytes"))
-            )
-        return metadata.total_bytes(self._log(), stream_id)
-
     def bucket_index(self) -> DataFrame:
         s = self._summary()
         if s is not None:
@@ -201,29 +178,24 @@ class Storage:
 
     def partition_metadata(self, stream_id: str, partition: int) -> dict:
         """The metadata-endpoint payload (src/http/DataMetadataEndpoints.ts:
-        21-26), one aggregation pass; values are plain Python for JSON."""
+        21-26), one aggregation pass over the summary when there is one,
+        else over the log; values are plain Python for JSON."""
         s = self._summary()
-        if s is not None:
-            agg = (
-                s.filter((F.col("stream_id") == stream_id) & (F.col("partition") == partition))
-                .agg(
-                    F.sum("size").alias("totalBytes"),
-                    F.sum("records").alias("totalMessages"),
-                    F.unix_millis(F.min("date_create")).alias("firstMessage"),
-                    F.unix_millis(F.max("max_ts")).alias("lastMessage"),
-                )
+        if s is None:
+            agg = metadata.partition_metadata(self._log(), stream_id, partition)
+        else:
+            agg = s.filter(
+                (F.col("stream_id") == stream_id) & (F.col("partition") == partition)
+            ).agg(
+                F.sum("size").alias("totalBytes"),
+                F.sum("records").alias("totalMessages"),
+                F.unix_millis(F.min("date_create")).alias("firstMessage"),
+                F.unix_millis(F.max("max_ts")).alias("lastMessage"),
             )
-            row = agg.collect()[0]
-            return {
-                "totalBytes": row["totalBytes"] or 0,
-                "totalMessages": row["totalMessages"] or 0,
-                "firstMessage": row["firstMessage"],
-                "lastMessage": row["lastMessage"],
-            }
-        row = metadata.partition_metadata(self._log(), stream_id, partition).collect()[0]
+        row = agg.collect()[0]
         return {
             "totalBytes": row["totalBytes"] or 0,
-            "totalMessages": row["totalMessages"],
+            "totalMessages": row["totalMessages"] or 0,
             "firstMessage": row["firstMessage"],
             "lastMessage": row["lastMessage"],
         }

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from broker_spark.schema import DEFAULT_BUCKET_MS, bucket_of
+from broker_spark.storage.store import read_if_written
 
 SUMMARY_SCHEMA = (
     "stream_id string, partition int, bucket long, records bigint,"
@@ -63,11 +64,8 @@ def foreach_batch_bucket_index(summary_path: str, bucket_ms: int = DEFAULT_BUCKE
     def _run(batch: DataFrame, _batch_id: int) -> None:
         spark = batch.sparkSession
         partials = batch_bucket_partials(batch, bucket_ms)
-        try:
-            existing = spark.read.parquet(summary_path)
-            merged = merge_summary(existing, partials)
-        except Exception:  # first batch: no summary yet
-            merged = partials
+        existing = read_if_written(lambda: spark.read.parquet(summary_path))
+        merged = partials if existing is None else merge_summary(existing, partials)
         # collect-then-rewrite keeps this atomic-enough for a small summary;
         # localCheckpoint breaks lineage so the overwrite doesn't read its
         # own output mid-write.

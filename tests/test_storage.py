@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from broker_spark.operators import metadata, retention
+from broker_spark.operators import retention
 from broker_spark.schema import STREAM_MESSAGE_SCHEMA
 from broker_spark.storage.store import Storage
 from tests.conftest import ids, make_msg
@@ -52,17 +52,16 @@ def test_partition_pruning_in_plan(store):
 
 
 def test_metadata_aggregates(store):
-    first = store.get_first_message_ts("s1", 0).collect()[0]["first_ts"]
-    last = store.get_last_message_ts("s1", 0).collect()[0]["last_ts"]
-    assert int(first.timestamp() * 1000) == 0
-    assert int(last.timestamp() * 1000) == 9500
-    counts = {
-        (r["stream_id"], r["partition"]): r["records"]
-        for r in store.get_number_of_messages("s1").collect()
-    }
+    meta = store.partition_metadata("s1", 0)
+    assert meta["firstMessage"] == 0
+    assert meta["lastMessage"] == 9500
+    counts: dict = {}
+    for r in store.bucket_index().filter(F.col("stream_id") == "s1").collect():
+        key = (r["stream_id"], r["partition"])
+        counts[key] = counts.get(key, 0) + r["records"]
     assert counts == {("s1", 0): 40}
-    total = store.get_total_bytes("s1").collect()[0]["total_bytes"]
-    assert total == 40 * len('{"hello":"world"}')
+    assert meta["totalMessages"] == 40
+    assert meta["totalBytes"] == 40 * len('{"hello":"world"}')
 
 
 def test_bucket_index_counters(store):
@@ -97,10 +96,13 @@ def test_retention_respects_per_stream_config(spark):
 
 
 def test_empty_storage_reads_gracefully(spark, tmp_path):
-    """A fresh node with no log answers empty, not 500 (the reference's
-    empty-result behavior, Storage.test.ts:95-121)."""
-    st = Storage(spark, str(tmp_path / "never-written"))
-    assert st.request_last("s", 0, 5).collect() == []
-    assert st.request_from("s", 0, 0).collect() == []
-    meta = st.partition_metadata("s", 0)
-    assert meta["totalMessages"] == 0 and meta["firstMessage"] is None
+    """A fresh node with no log — no directory, or an empty one — answers
+    empty, not 500 (the reference's empty-result behavior,
+    Storage.test.ts:95-121)."""
+    (tmp_path / "empty").mkdir()
+    for log in ("never-written", "empty"):
+        st = Storage(spark, str(tmp_path / log))
+        assert st.request_last("s", 0, 5).collect() == []
+        assert st.request_from("s", 0, 0).collect() == []
+        meta = st.partition_metadata("s", 0)
+        assert meta["totalMessages"] == 0 and meta["firstMessage"] is None

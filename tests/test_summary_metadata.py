@@ -26,21 +26,13 @@ def test_summary_answers_match_scan(spark, tmp_path):
 
     sum_st = Storage(spark, log, bucket_ms=1000, summary_path=summary)
     assert sum_st.partition_metadata("s", 0) == scan_st.partition_metadata("s", 0)
-    a = {r["partition"]: r["records"] for r in sum_st.get_number_of_messages("s").collect()}
-    b = {r["partition"]: r["records"] for r in scan_st.get_number_of_messages("s").collect()}
-    assert a == b
-    assert (
-        sum_st.get_total_bytes("s").collect()[0]["total_bytes"]
-        == scan_st.get_total_bytes("s").collect()[0]["total_bytes"]
-    )
-    assert (
-        sum_st.get_first_message_ts("s", 0).collect()[0][0]
-        == scan_st.get_first_message_ts("s", 0).collect()[0][0]
-    )
-    assert (
-        sum_st.get_last_message_ts("s", 0).collect()[0][0]
-        == scan_st.get_last_message_ts("s", 0).collect()[0][0]
-    )
+    # per-bucket counters: records, bytes, first and last ts
+    cols = ["stream_id", "partition", "bucket", "records", "size", "date_create", "max_ts"]
+
+    def counters(st):
+        return sorted(tuple(r) for r in st.bucket_index().select(*cols).collect())
+
+    assert counters(sum_st) == counters(scan_st)
 
 
 def test_summary_plan_does_not_touch_log(spark, tmp_path):
@@ -49,7 +41,7 @@ def test_summary_plan_does_not_touch_log(spark, tmp_path):
     batch = spark.createDataFrame([make_msg("s", 0, 1000, 0)], ENVELOPE)
     st.store(batch)
     foreach_batch_bucket_index(summary, bucket_ms=1000)(batch, 0)
-    plan = st.get_number_of_messages("s")._jdf.queryExecution().executedPlan().toString()
+    plan = st.bucket_index()._jdf.queryExecution().executedPlan().toString()
     # the scan must read summary columns (records), not the log (content)
     assert "records:bigint" in plan
     assert "content" not in plan and "log2" not in plan

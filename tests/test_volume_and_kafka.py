@@ -5,11 +5,13 @@ no broker needed for the column logic)."""
 from __future__ import annotations
 
 import json
+import urllib.request
 
 import pytest
 
-from broker_spark.jobs.stream_metrics import MetricsContext
+from broker_spark.jobs.stream_metrics import STORAGE_WRITE_MESSAGES, MetricsContext
 from broker_spark.jobs.volume_logger import VolumeLogger
+from broker_spark.serving import http as serving_http
 from broker_spark.serving.publish import PublishSpool
 from broker_spark.sources.kafka import envelope_from_kafka
 from broker_spark.storage.store import Storage
@@ -30,7 +32,7 @@ class TestVolumeLogger:
         ctx = MetricsContext()
         ctx.record("publisher.messages", 100)
         ctx.record("publisher.bytes", 50_000)
-        ctx.record("storage.writeCount", 10)
+        ctx.record(STORAGE_WRITE_MESSAGES, 10)
         vl = VolumeLogger(ctx, node_address="0xnode")
         s = vl.report_and_reset(now_ms=T0)
         assert s["peerId"] == "0xnode" and s["timestamp"] == T0
@@ -67,6 +69,36 @@ class TestVolumeLogger:
         assert report["peerId"] == "0xn"
         assert report["rates"]["publisher.messages"] > 0
         assert report["timestamp"] == T0
+
+    def test_node_counters_reach_summary(self, spark, tmp_path):
+        """The counters a running node records are the ones the summary
+        reads: publish + flush feed the storage write rate, a resend the
+        read rate, and storage.readMessages counts the rows returned."""
+        st = Storage(spark, str(tmp_path / "counted-log"), bucket_ms=86_400_000)
+        ctx = MetricsContext()
+        spool = PublishSpool(st, partition_count=1, close_timeout_s=60.0, metrics=ctx)
+        server = serving_http.serve(st, spool=spool, metrics=ctx)
+        base = "http://%s:%d" % server.server_address
+        try:
+            for i in range(3):
+                req = urllib.request.Request(
+                    f"{base}/streams/counted/data?ts={T0 + i}", data=b'{"v": 1}', method="POST"
+                )
+                urllib.request.urlopen(req, timeout=60).read()
+            spool.flush()
+            body = urllib.request.urlopen(
+                f"{base}/streams/counted/data/partitions/0/last?count=10", timeout=120
+            ).read()
+        finally:
+            server.shutdown()
+            server.server_close()
+            spool.close()
+        assert len(json.loads(body)) == 3
+        totals = {k: v["total"] for k, v in ctx.report()["metrics"].items()}
+        assert totals["storage.readMessages"] == 3
+        s = VolumeLogger(ctx).report_and_reset(now_ms=T0)
+        assert s["storageWritePerSecond"] > 0
+        assert s["storageReadPerSecond"] > 0
 
     def test_disabled_interval_never_schedules(self):
         vl = VolumeLogger(MetricsContext(), reporting_interval_s=0)
